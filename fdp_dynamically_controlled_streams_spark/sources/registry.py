@@ -14,7 +14,9 @@ building a Kafka reader raises a clear error at use, not import, time.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import time
 from typing import Any, Callable
@@ -31,6 +33,31 @@ _BATCH_FORMATS = ("parquet", "json", "csv", "orc", "text", "xml")
 #: attributed to build vs run before it could be fixed). Reset-free running
 #: totals; bench snapshots before/after each query.
 FIXTURE_STATS: dict[str, float] = {"build_sec": 0.0, "builds": 0, "cache_hits": 0}
+
+#: The process's one scratch root (``dcs-scratch-*`` under the temp dir),
+#: made on first use and removed at exit. Every fixture, replay output and
+#: checkpoint the catalog writes lives below it; nothing is removed earlier,
+#: because returned DataFrames are lazy and may still read their files.
+_SCRATCH_ROOT: str | None = None
+
+
+def _remove_scratch_root() -> None:
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is not None:
+        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
+        _SCRATCH_ROOT = None
+
+
+atexit.register(_remove_scratch_root)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh empty dir under the process's scratch root."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None or not os.path.isdir(_SCRATCH_ROOT):
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="dcs-scratch-")
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
 
 #: Process-lifetime cache of replay INPUT fixture dirs, keyed by
 #: (entry, sf_dir). The chunk files are a pure function of the SF tables and
@@ -52,7 +79,7 @@ def cached_fixture(
     if path is not None and os.path.isdir(path):
         FIXTURE_STATS["cache_hits"] += 1
         return path
-    path = tempfile.mkdtemp(prefix=f"dcs-fix-{entry[:24]}-")
+    path = scratch_dir(f"fix-{entry[:24]}-")
     t0 = time.perf_counter()
     build(path)
     FIXTURE_STATS["build_sec"] += time.perf_counter() - t0

@@ -39,6 +39,8 @@ from fdp_dynamically_controlled_streams_spark.functions.parallelism import (
     overlap_jobs,
 )
 from fdp_dynamically_controlled_streams_spark.operators import dedup as dedup_ops
+from fdp_dynamically_controlled_streams_spark.sources.registry import replay_dir
+from fdp_dynamically_controlled_streams_spark.streaming.replay import run_replay
 
 
 def _is_committed(path: str, parts: tuple[str, ...] = ()) -> bool:
@@ -215,6 +217,12 @@ def minhash_maintenance_pipeline(
     * ``work_dir/out/e<epoch>/``  — epoch's decision rows
     * ``work_dir/chk``            — the streaming checkpoint
 
+    The resume law needs all three, so ``work_dir`` belongs to the caller.
+    The query runs through :func:`streaming.replay.run_replay` with 8
+    state partitions, named after the catalog entry that calls this
+    pipeline, and raises ``TimeoutError`` if it has not finished within
+    ``timeout_sec`` — as do the three sibling pipelines below.
+
     Returns the decisions root (``work_dir/out``).  Calling it again
     with the same ``work_dir`` after more files appear in ``data_path``
     RESUMES: already-committed epochs are skipped by the streaming
@@ -230,10 +238,6 @@ def minhash_maintenance_pipeline(
     roll epoch decision dirs into one ``c<epoch>`` dir whenever
     :func:`compaction_due` fires on the dir count; None disables.  Both
     are answer-invariant by law (tests/test_streaming.py)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
-
     sig_root = os.path.join(work_dir, "sig")
     out_root = os.path.join(work_dir, "out")
     os.makedirs(sig_root, exist_ok=True)
@@ -269,15 +273,15 @@ def minhash_maintenance_pipeline(
                 spark, out_root, dec_ddl, compact_outputs_depth
             )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    run_replay(
+        replay_dir(spark, data_path, schema, files_per_trigger),
+        _proc,
+        name="stream_minhash_maintenance_pipeline",
+        partitions=8,
+        checkpoint=os.path.join(work_dir, "chk"),
+        output_mode="append",
+        timeout_sec=timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return out_root
 
 
@@ -342,19 +346,15 @@ def embedding_maintenance_pipeline(
                 spark, out_root, dec_ddl, compact_outputs_depth
             )
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
+    run_replay(
+        replay_dir(spark, data_path, schema, files_per_trigger),
+        _proc,
+        name="stream_embedding_maintenance_pipeline",
+        partitions=8,
+        checkpoint=os.path.join(work_dir, "chk"),
+        output_mode="append",
+        timeout_sec=timeout_sec,
     )
-
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
     return out_root
 
 
@@ -387,10 +387,6 @@ def exact_substring_maintenance_pipeline(
     and the upsert writes the full next-index snapshot (the durable
     counterpart of the replay entry's lazy delta — a MERGE INTO on a
     transactional table in production)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
-
     idx_root = os.path.join(work_dir, "idx")
     out_root = os.path.join(work_dir, "out")
     os.makedirs(idx_root, exist_ok=True)
@@ -437,15 +433,15 @@ def exact_substring_maintenance_pipeline(
                 spark, out_root, dec_ddl, compact_outputs_depth
             )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    run_replay(
+        replay_dir(spark, data_path, schema, files_per_trigger),
+        _proc,
+        name="stream_exact_substring_maintenance_pipeline",
+        partitions=8,
+        checkpoint=os.path.join(work_dir, "chk"),
+        output_mode="append",
+        timeout_sec=timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return out_root
 
 
@@ -488,10 +484,6 @@ def bm25_maintenance_pipeline(
     from fdp_dynamically_controlled_streams_spark.operators import (
         retrieval as retr_ops,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
-
     idx_root = os.path.join(work_dir, "idx")
     fold_root = os.path.join(work_dir, "fold")
     out_root = os.path.join(work_dir, "out")
@@ -555,15 +547,15 @@ def bm25_maintenance_pipeline(
                 spark, out_root, dec_ddl, compact_outputs_depth
             )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    run_replay(
+        replay_dir(spark, data_path, schema, files_per_trigger),
+        _proc,
+        name="stream_bm25_maintenance_pipeline",
+        partitions=8,
+        checkpoint=os.path.join(work_dir, "chk"),
+        output_mode="append",
+        timeout_sec=timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return out_root
 
 

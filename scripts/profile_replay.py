@@ -1,9 +1,10 @@
 """Per-micro-batch cost attribution for the streaming replay entries.
 
 Runs the named catalog entries (argv, default: a representative replay set)
-once in a warm session with a StreamingQueryListener attached, and prints
-each streaming query's per-batch durationMs breakdown (triggerExecution,
-queryPlanning, getBatch, addBatch, walCommit, commitOffsets, ...) plus the
+twice in a warm session with streaming/monitor.ProgressRecorder attached,
+and prints the per-batch durationMs breakdown (triggerExecution,
+queryPlanning, getBatch, addBatch, walCommit, commitOffsets, ...) of the
+streaming queries each pass ran, selected by query id and name, plus the
 entry's wall seconds.  Measurement-only tooling (guide §1): it never touches
 what the entries compute.
 
@@ -13,7 +14,6 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -21,10 +21,11 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
-
 from fdp_dynamically_controlled_streams_spark.queries import spark_queries  # noqa: E402
 from fdp_dynamically_controlled_streams_spark.session import get_spark  # noqa: E402
+from fdp_dynamically_controlled_streams_spark.streaming.monitor import (  # noqa: E402
+    ProgressRecorder,
+)
 
 DEFAULT = [
     "stream_interval_full_join_replay",
@@ -35,37 +36,18 @@ DEFAULT = [
 ]
 
 
-class Capture(StreamingQueryListener):
-    def __init__(self) -> None:
-        self.events: list[dict] = []
-        self.starts: list[float] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        self.starts.append(time.perf_counter())
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = json.loads(event.progress.json)
-        self.events.append(
-            {
-                "batchId": p.get("batchId"),
-                "durationMs": p.get("durationMs", {}),
-                "numInputRows": p.get("numInputRows"),
-                "stateOperators": [
-                    {
-                        "numRowsTotal": s.get("numRowsTotal"),
-                        "commitTimeMs": s.get("commitTimeMs"),
-                        "customMetrics": s.get("customMetrics", {}),
-                    }
-                    for s in p.get("stateOperators", [])
-                ],
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+def _entry_batches(rec: ProgressRecorder, name: str, seen: set[str]) -> list:
+    """Batches of the queries the entry just ran: named after it (the replay
+    runner names each query after its entry), not run by an earlier pass,
+    and terminated, so no late progress event is still in flight."""
+    deadline = time.time() + 10
+    while True:
+        ids = {b.query_id for b in rec.batches if b.name == name} - seen
+        if (ids and ids <= rec.terminated) or time.time() > deadline:
+            break
+        time.sleep(0.1)
+    seen |= ids
+    return [b for b in rec.batches if b.query_id in ids]
 
 
 def main() -> None:
@@ -74,23 +56,18 @@ def main() -> None:
     spark = get_spark(app_name="profile-replay")
     spark.range(1000).count()
     qs = spark_queries()
-    cap = Capture()
-    spark.streams.addListener(cap)
+    rec = ProgressRecorder()
+    spark.streams.addListener(rec)
+    seen: set[str] = set()
     for name in names:
         for rep in range(2):  # run twice: pass 2 hits the fixture cache
-            cap.events.clear()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
-            batches = cap.events
-            tot = lambda k: sum(e["durationMs"].get(k, 0) for e in batches)  # noqa: E731
-            commit = sum(
-                s["commitTimeMs"]
-                for e in batches
-                for s in e["stateOperators"]
-                if s.get("commitTimeMs")
-            )
+            batches = _entry_batches(rec, name, seen)
+            tot = lambda k: sum(b.duration_ms.get(k, 0) for b in batches)  # noqa: E731
+            commit = sum(b.state_commit_ms or 0 for b in batches)
             print(
                 f"{name} pass{rep + 1}: wall={wall:.2f}s batches={len(batches)} "
                 f"trigger={tot('triggerExecution')}ms addBatch={tot('addBatch')}ms "
@@ -99,9 +76,9 @@ def main() -> None:
                 f"commitOffsets={tot('commitOffsets')}ms stateCommit={commit}ms"
             )
             if rep == 1:
-                for e in batches:
-                    print(f"   batch {e['batchId']}: {e['durationMs']}")
-    spark.streams.removeListener(cap)
+                for b in batches:
+                    print(f"   batch {b.batch_id}: {b.duration_ms}")
+    spark.streams.removeListener(rec)
 
 
 if __name__ == "__main__":

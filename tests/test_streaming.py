@@ -106,26 +106,6 @@ def test_streaming_matches_batch_twin_single_batch(spark, tmpdir):
     assert got == sorted(EXPECTED)
 
 
-def test_tws_runtime_matches_spec_across_batches(spark, tmpdir):
-    """transformWithStateInPandas (Spark 4 runtime) — same semantics, third
-    runtime: output must equal the applyInPandasWithState + batch results."""
-    from fdp_dynamically_controlled_streams_spark.streaming.controller_tws import (
-        TWS_AVAILABLE,
-        controller_streaming_tws,
-    )
-
-    if not TWS_AVAILABLE:
-        pytest.skip(
-            "transformWithState state protocol needs the protobuf package "
-            "(absent in this container); applyInPandasWithState covers the "
-            "same semantics in test_streaming_state_across_micro_batches"
-        )
-    pdf = _scenario_unified()
-    chunks = [pdf.iloc[:4], pdf.iloc[4:9], pdf.iloc[9:]]
-    got = _run_stream(spark, chunks, tmpdir, runtime=controller_streaming_tws)
-    assert got == sorted(EXPECTED)
-
-
 def test_streaming_state_across_micro_batches(spark, tmpdir):
     """Split mid-stream: setting + lastAction must survive batch boundaries."""
     pdf = _scenario_unified()
@@ -385,8 +365,61 @@ def test_progress_recorder_observes_replay_micro_batches(spark):
         assert len(data_batches) >= 2  # one per chunk file
         assert sum(b.num_input_rows for b in data_batches) > 0
         assert any((b.state_rows or 0) > 0 for b in data_batches)
+        # the replay runner names each query after its entry
+        assert {b.name for b in data_batches} == {"streaming_dedup_replay"}
+        assert len({b.query_id for b in data_batches}) == 1
+        assert all(b.duration_ms.get("addBatch", 0) > 0 for b in data_batches)
     finally:
         spark.streams.removeListener(rec)
+
+
+def test_stalled_replay_raises_and_stops(spark, tmp_path):
+    """A replay that outlives its timeout raises TimeoutError — the caller
+    gets no rows — and leaves no query running. The sink sleeps for a
+    bounded time: stopping a query waits for a foreachBatch callback that
+    is in progress."""
+    import time
+
+    from fdp_dynamically_controlled_streams_spark.streaming.replay import (
+        run_replay,
+    )
+
+    pdf = _scenario_unified()
+    write_replay_chunks([pdf.iloc[:6], pdf.iloc[6:]], str(tmp_path / "replay"))
+    stream = replay_dir(spark, str(tmp_path / "replay"), UNIFIED_DDL)
+    with pytest.raises(TimeoutError):
+        run_replay(
+            controller_streaming(stream),
+            lambda bdf, bid: time.sleep(8),
+            name="stalled_replay",
+            partitions=2,
+            checkpoint=str(tmp_path / "chk"),
+            output_mode="update",
+            timeout_sec=2,
+        )
+    assert spark.streams.active == []
+
+
+def test_scratch_is_contained_and_removed(spark, tmp_path, monkeypatch):
+    """A replay entry and a fixture build leave one dcs-* dir in the temp
+    dir, the process's scratch root, and the exit hook removes it."""
+    import tempfile
+
+    from fdp_dynamically_controlled_streams_spark.queries import spark_queries
+    from fdp_dynamically_controlled_streams_spark.sources import registry
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(registry, "_SCRATCH_ROOT", None)
+    monkeypatch.setattr(registry, "_FIXTURE_CACHE", {})
+    builds = registry.FIXTURE_STATS["builds"]
+    n = spark_queries()["streaming_dedup_replay"](spark, SF_SMOKE).count()
+    assert n > 0
+    assert registry.FIXTURE_STATS["builds"] == builds + 1
+    roots = list(tmp_path.glob("dcs-*"))
+    assert [r.name[: len("dcs-scratch-")] for r in roots] == ["dcs-scratch-"]
+    registry._remove_scratch_root()
+    assert not roots[0].exists()
 
 
 def test_write_replay_chunks_partitioned_exact_boundaries(spark, tmp_path):
